@@ -1,4 +1,5 @@
 import os
+import pathlib
 import tempfile
 
 import pytest
@@ -116,6 +117,18 @@ SLOW_FULL_SUITE_ONLY = frozenset(
 )
 
 
+_REPO_ROOT = pathlib.Path(__file__).resolve().parent.parent
+
+
+def fast_gate_key(path, nodeid: str) -> str:
+    """A test's SLOW_FULL_SUITE_ONLY id: its file relative to the repo
+    root, then the nodeid's in-file part. ``item.nodeid`` alone is
+    relative to pytest's rootdir, so it changes when pytest runs from
+    inside ``tests/``; this key does not."""
+    rel = pathlib.Path(path).resolve().relative_to(_REPO_ROOT).as_posix()
+    return f"{rel}::{nodeid.split('::', 1)[1]}"
+
+
 def pytest_collection_modifyitems(config, items):
     if os.environ.get("WILLA_FULL_SUITE"):
         return
@@ -124,5 +137,5 @@ def pytest_collection_modifyitems(config, items):
         "coverage) — set WILLA_FULL_SUITE=1 or run tools/run_tests.sh"
     )
     for item in items:
-        if item.nodeid in SLOW_FULL_SUITE_ONLY:
+        if fast_gate_key(item.path, item.nodeid) in SLOW_FULL_SUITE_ONLY:
             item.add_marker(skip)

@@ -549,8 +549,8 @@ def test_lm_above_gate_hash_join_path(spark):
         ("jm", LM.bigram_perplexity),
         ("kn", LM.kn_bigram_perplexity),
     ):
-        wide = fn(probe, model, broadcast_max_rows=0, model_pinned=True)
-        narrow = fn(probe, model, model_pinned=True)
+        wide = fn(probe, model, broadcast_max_rows=0)
+        narrow = fn(probe, model)
         # plan pin: with the gate at 0 every model-table join must be
         # a shuffle join. AQE can still plan BroadcastHashJoin for the
         # tiny fixture at RUNTIME, so pin the pre-AQE static plan and

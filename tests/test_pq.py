@@ -565,24 +565,3 @@ def test_pq_recall_bands_oracle_parity(spark):
         assert len(got) == len(want) > 0
         assert got == want
 
-
-def test_exact_arm_cache_evicts_dead_sessions(spark):
-    """_EXACT_ARM_CACHE eviction (r12 advice): inserting under the
-    live applicationId drops every entry keyed by a DIFFERENT appId —
-    a stopped session's keys otherwise reference localCheckpointed
-    frames of a dead SparkContext for the process lifetime."""
-    from willa_spark import queries as Q
-
-    sf_dir = "/root/testdata/sf0.001"
-    app = spark.sparkContext.applicationId
-    Q._EXACT_ARM_CACHE.clear()
-    Q._EXACT_ARM_CACHE[("dead-app-123", sf_dir, 10)] = "stale-sentinel"
-    arm = Q._exact_arm(spark, sf_dir, 10)
-    assert ("dead-app-123", sf_dir, 10) not in Q._EXACT_ARM_CACHE
-    assert Q._EXACT_ARM_CACHE[(app, sf_dir, 10)] is arm
-    # a same-session re-ask is a cache hit, not a recompute
-    assert Q._exact_arm(spark, sf_dir, 10) is arm
-    # and a same-session insert under another k evicts nothing live
-    Q._exact_arm(spark, sf_dir, 5)
-    assert (app, sf_dir, 10) in Q._EXACT_ARM_CACHE
-    Q._EXACT_ARM_CACHE.clear()

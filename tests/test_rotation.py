@@ -5,6 +5,8 @@ WHATEVER the current DRIVER_OMIT says — so the per-round gate edit
 can never silently strand a query or a proof (the checks each round
 ran by hand, r12 verdict #2, now permanent)."""
 
+import pathlib
+
 from willa_spark.queries import (
     DRIVER_OMIT,
     EXHIBITION,
@@ -161,7 +163,29 @@ def test_fast_gate_skip_list_names_real_tests():
          "--no-header", "-p", "no:cacheprovider"],
         capture_output=True, text=True, timeout=300,
         env={**__import__("os").environ, "WILLA_FULL_SUITE": "1"},
+        cwd=pathlib.Path(__file__).resolve().parents[1],
     )
+    assert out.returncode == 0, out.stderr or out.stdout[-4000:]
     collected = set(out.stdout.splitlines())
     missing = {t for t in SLOW_FULL_SUITE_ONLY if t not in collected}
     assert not missing, missing
+
+
+def test_fast_gate_key_ignores_the_rootdir():
+    """The skip matcher keys a test the same whether pytest's rootdir
+    is the repo root or ``tests/`` itself (the nodeid differs)."""
+    from tests.conftest import SLOW_FULL_SUITE_ONLY, fast_gate_key
+
+    tests_dir = pathlib.Path(__file__).resolve().parent
+    listed = "tests/test_lm.py::test_kn_bigram_python_differential"
+    assert listed in SLOW_FULL_SUITE_ONLY
+    path = tests_dir / "test_lm.py"
+    for nodeid in (
+        "tests/test_lm.py::test_kn_bigram_python_differential",
+        "test_lm.py::test_kn_bigram_python_differential",
+    ):
+        assert fast_gate_key(path, nodeid) == listed
+    assert (
+        fast_gate_key(tests_dir / "test_pq.py", "test_pq.py::test_x[sf0.1]")
+        == "tests/test_pq.py::test_x[sf0.1]"
+    )

@@ -887,13 +887,12 @@ def test_dsir_calibration_oracle_parity(spark, sf_dir):
     assert got[-1][3] > got[0][3]
 
 
-def test_kl_profile_pin_hatch(spark):
-    """The ``pin`` escape hatch (r12 advice): the default eager
-    localCheckpoint is a CALL-TIME corpus-scale job + session-long
-    executor residency, so batch-twin/100 TB callers can re-point the
-    (group, gram) materialization — a custom pin callable is invoked
-    exactly once with that frame, and an identity (lazy) pin produces
-    identical results to the default."""
+def test_kl_profile_pins_group_gram_frame_once(spark, monkeypatch):
+    """Every downstream frame of the profile derives from the
+    (group, gram) counts, so that frame — and only it — is pinned,
+    exactly once, with or without vocabulary truncation."""
+    from willa_spark import pin as PIN
+
     rows = [
         (0, "a", "x y x y"),
         (1, "a", "x y y z"),
@@ -901,35 +900,20 @@ def test_kl_profile_pin_hatch(spark):
         (3, "b", "p q z z"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-    bases = {}
-    for knobs in ({}, {"top_v": 3, "min_count": 1}):
-        base = bases[bool(knobs)] = sorted(
-            tuple(r)
-            for r in SEL.kl_divergence_profile(
-                df, group_col="lang", ns=(1,), **knobs
-            ).collect()
-        )
-        lazy = sorted(
-            tuple(r)
-            for r in SEL.kl_divergence_profile(
-                df, group_col="lang", ns=(1,), pin=lambda d: d, **knobs
-            ).collect()
-        )
-        assert lazy == base, knobs
     calls = []
 
-    def counting_pin(d):
+    def counting_pin(d, label, **kw):
         calls.append(d.columns)
-        return d.localCheckpoint(eager=True)
+        return PIN.pin(d, label, **kw)
 
-    got = sorted(
-        tuple(r)
-        for r in SEL.kl_divergence_profile(
-            df, group_col="lang", ns=(1,), pin=counting_pin
+    monkeypatch.setattr(SEL, "pin", counting_pin)
+    for knobs in ({}, {"top_v": 3, "min_count": 1}):
+        calls.clear()
+        got = SEL.kl_divergence_profile(
+            df, group_col="lang", ns=(1,), **knobs
         ).collect()
-    )
-    assert got == bases[False]  # the un-knobbed profile, exactly
-    assert calls == [["__grp", "feature", "__cg"]]  # once, THE frame
+        assert sorted(r["lang"] for r in got) == ["a", "b"], knobs
+        assert calls == [["__grp", "feature", "__cg"]], knobs
 
 
 # ---------------------------------------------------------------- DoReMi
@@ -1222,7 +1206,6 @@ def test_domain_mixture_step_congruity_and_replay(spark, tmp_path):
             for r in SEL.domain_mixture_weights(
                 df.filter(F.col("doc_id").isin(seen)),
                 model=ref,
-                model_pinned=True,
             ).collect()
         )
         assert [g[:3] for g in got] == [w[:3] for w in want], bid
@@ -1240,7 +1223,7 @@ def test_domain_mixture_step_congruity_and_replay(spark, tmp_path):
     want2 = sorted(
         key(r)
         for r in SEL.domain_mixture_weights(
-            df.filter(F.col("doc_id").isin(after2)), model=ref, model_pinned=True
+            df.filter(F.col("doc_id").isin(after2)), model=ref
         ).collect()
     )
     assert [g[:3] for g in replay] == [w[:3] for w in want2]
@@ -1250,7 +1233,7 @@ def test_domain_mixture_step_congruity_and_replay(spark, tmp_path):
     )
     want4 = sorted(
         key(r)
-        for r in SEL.domain_mixture_weights(df, model=ref, model_pinned=True).collect()
+        for r in SEL.domain_mixture_weights(df, model=ref).collect()
     )
     assert [g[:3] for g in got4] == [w[:3] for w in want4]
     # duplicate ids fail loud before persisting
@@ -1280,13 +1263,13 @@ def test_domain_mixture_kn_scorer(spark):
     got = {
         r["lang"]: (r["n_transitions"], r["ce"], r["weight"])
         for r in SEL.domain_mixture_weights(
-            df, model=model, model_pinned=True, scorer="kn"
+            df, model=model, scorer="kn"
         ).collect()
     }
     docs = {
         r["doc_id"]: (r["n_transitions"], r["ppl"])
         for r in LM.kn_bigram_perplexity(
-            df.select("doc_id", "text"), model, model_pinned=True
+            df.select("doc_id", "text"), model
         ).collect()
     }
     by_lang = {}
@@ -1300,7 +1283,7 @@ def test_domain_mixture_kn_scorer(spark):
     assert sum(v[2] for v in got.values()) == pytest.approx(1.0, abs=5e-6)
     with pytest.raises(ValueError, match="Jelinek-Mercer knob"):
         SEL.domain_mixture_weights(
-            df, model=model, model_pinned=True, scorer="kn", lam=0.5
+            df, model=model, scorer="kn", lam=0.5
         )
     with pytest.raises(ValueError, match="Kneser-Ney knob"):
         SEL.domain_mixture_weights(df, discount=0.7)
@@ -1335,7 +1318,6 @@ def test_domain_mixture_step_kn_congruity(spark, tmp_path):
             for r in SEL.domain_mixture_weights(
                 df.filter(F.col("doc_id").isin(seen)),
                 model=ref,
-                model_pinned=True,
                 scorer="kn",
             ).collect()
         )
@@ -1465,7 +1447,7 @@ def test_domain_mixture_trajectory_converges_to_hardest(spark):
         df.filter(F.col("lang") != "xx").select("doc_id", "text")
     ).localCheckpoint(eager=True)
     rows = SEL.domain_mixture_trajectory(
-        df, model=model, model_pinned=True, eta=0.05, steps=6
+        df, model=model, eta=0.05, steps=6
     ).collect()
     xx = [r["weight"] for r in sorted(rows, key=lambda r: r["step"]) if r["lang"] == "xx"]
     en = [r["weight"] for r in sorted(rows, key=lambda r: r["step"]) if r["lang"] == "en"]
@@ -1578,7 +1560,6 @@ def test_domain_mixture_trajectory_step_congruity_and_replay(spark, tmp_path):
             for r in SEL.domain_mixture_trajectory(
                 df.filter(F.col("doc_id").isin(seen)),
                 model=ref,
-                model_pinned=True,
                 eta=1.0,
                 steps=4,
             ).collect()
@@ -1598,7 +1579,6 @@ def test_domain_mixture_trajectory_step_congruity_and_replay(spark, tmp_path):
         for r in SEL.domain_mixture_trajectory(
             df.filter(F.col("doc_id").isin(after2)),
             model=ref,
-            model_pinned=True,
             eta=1.0,
             steps=4,
         ).collect()

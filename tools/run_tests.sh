@@ -5,7 +5,7 @@
 # pytest-xdist is not installable in this environment, so this shards
 # test FILES across N independent pytest processes, each with its own
 # local[4] Spark session (the conftest fixture is session-scoped per
-# process; 32 host cores comfortably fit 4 such sessions).
+# process), so the default is one shard per 4 host cores, at least 1.
 #
 # Sharding is DURATION-AWARE: tools/shard_plan.py greedy-bin-packs the
 # files (longest first into the lightest shard) using the wall times in
@@ -15,10 +15,11 @@
 # tracks the suite as it grows. (The previous round-robin-by-filename
 # plan left shard walls 2x apart: 337 s vs 171 s.)
 #
-# Usage: tools/run_tests.sh [N]        (default 4 shards)
+# Usage: tools/run_tests.sh [N]        (default nproc/4 shards, >= 1)
 # Logs:  /tmp/willa_test_logs/shard<i>.log
 set -u
-N=${1:-4}
+N=${1:-$(($(env -u OMP_NUM_THREADS -u OMP_THREAD_LIMIT nproc) / 4))}
+[ "$N" -ge 1 ] || N=1
 cd "$(dirname "$0")/.."
 # the sharded runner IS the full suite (the builder's close); a bare
 # `pytest tests/` runs the FAST GATE (tests/conftest.py skips the

@@ -16,9 +16,9 @@ Spark-first shape (the part that matters at 100 TB):
   centroids and the union-find cap probe), (c) the merge applied to
   the symbol arrays by a linear ``F.aggregate`` fold (left-to-right
   non-overlapping, matching the classic implementations), then
-  a LAZY ``localCheckpoint`` so the plan never deepens with the round
-  count (the next round's collect materializes it inside its own job —
-  one job per round, not two). Rounds are sequential BY THE ALGORITHM
+  a LAZY pin so the plan never deepens with the round count (the next
+  round's collect materializes it inside its own job — one job per
+  round, not two). Rounds are sequential BY THE ALGORITHM
   (merge k+1 depends on merge k) — the parallelism is within each round.
 - Encoding NEVER runs per corpus token: ``segment_words`` applies the
   merge list to the distinct-word table (same fold kernel, one
@@ -47,6 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..pin import pin
 from .text import tokens
 
 # End-of-word marker: a standalone final symbol, so a word-final piece
@@ -211,15 +212,11 @@ def bpe_train(
     words = word_counts(docs, text_col).select(
         _initial_symbols(F.col("word")).alias("sym"), "count"
     )
-    # LAZY checkpoints throughout the round loop (r15): each round's
-    # argmax collect materializes the pending checkpoint as part of
-    # its own job, so a round costs ONE Spark job instead of two
-    # (collect + eager-checkpoint). Identical computation and blocks —
-    # only the materialization rides the next action instead of a
-    # dedicated dispatch. At sf0.1 this halved the row's job count
-    # (16 merge rounds); at scale it saves a scheduler round trip per
-    # merge with the same O(vocab) checkpoint state.
-    words = words.localCheckpoint(eager=False)
+    # LAZY pins throughout the round loop: each round's argmax collect
+    # materializes the pending checkpoint inside its own job, so a
+    # round costs one Spark job instead of two (halved the row's job
+    # count at sf0.1)
+    words = pin(words, "bpe_train: word table", eager=False)
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
         top = (
@@ -234,15 +231,12 @@ def bpe_train(
             break
         a, b = top[0]["a"], top[0]["b"]
         merges.append((a, b))
-        # rebinding drops the previous round's only reference: a
-        # localCheckpoint's blocks are NOT released by unpersist()
-        # (the cache manager has no entry for its LogicalRDD plan) —
-        # they free when the ContextCleaner collects the dropped
-        # reference, so live checkpoint state stays O(vocab), not
-        # O(rounds x vocab), without a fake explicit release
+        # rebinding drops the previous round's only reference, so its
+        # blocks free on GC: live state stays O(vocab), not
+        # O(rounds x vocab)
         words = words.select(
             _apply_merge(F.col("sym"), a, b).alias("sym"), "count"
-        ).localCheckpoint(eager=False)
+        ).transform(pin, "bpe_train: merge round", eager=False)
     return merges
 
 
@@ -256,18 +250,17 @@ def segment_words(words: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     production-size merge list's long disjoint tail folds ~32 merges
     per pass. This is the vocabulary-sized half of encoding — corpus
     volume never enters here."""
-    # lazy checkpoints, as in bpe_train's round loop (r15): the
-    # caller's first action (usually _vocab_hint's count probe)
-    # materializes the whole batch chain in one job instead of one
-    # job per batch, with the same blocks cached afterwards
+    # lazy, as in bpe_train: the caller's first action (usually
+    # _vocab_hint's count probe) materializes the whole batch chain
+    # in one job instead of one job per batch
     seg = words.select(
         "word", _initial_symbols(F.col("word")).alias("pieces")
-    ).localCheckpoint(eager=False)
+    ).transform(pin, "segment_words: symbols", eager=False)
     for batch in _merge_batches(merges):
         # rebind-and-GC release, same as bpe_train's round loop
         seg = seg.select(
             "word", _apply_merge_batch(F.col("pieces"), batch).alias("pieces")
-        ).localCheckpoint(eager=False)
+        ).transform(pin, "segment_words: merge batch", eager=False)
     return seg
 
 
@@ -285,7 +278,7 @@ BROADCAST_VOCAB_MAX_WORDS = 1_000_000
 def _vocab_hint(seg: DataFrame, broadcast_vocab: bool | None) -> DataFrame:
     """Apply (or withhold) the broadcast hint on the segmented-vocab
     frame. ``None`` = auto: count the (already-materialized,
-    localCheckpointed) word table — one cheap job over cached blocks —
+    pinned) word table — one cheap job over cached blocks —
     and broadcast iff it is under ``BROADCAST_VOCAB_MAX_WORDS``.
 
     DELIBERATE EAGERNESS (r10 advice): auto mode runs that count

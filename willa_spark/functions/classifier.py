@@ -17,7 +17,7 @@ terms, deliberately NOT per-row Python):
   partial-agg shuffle (``selection._gram_features``, hashed to a
   FIXED ``num_buckets`` space — the model is K+1 doubles regardless
   of vocabulary), then one per-doc collect_list → (id, y, feats).
-  Built once, localCheckpoint-pinned, reused by every epoch — the
+  Built once, pinned, reused by every epoch — the
   dsir_weights pinned-explode discipline.
 - ``train_logreg``: full-batch deterministic gradient descent. Per
   epoch: margins map-side against the BROADCAST LITERAL weight array
@@ -82,7 +82,7 @@ def doc_feature_vectors(
     marker gram contributes a full-strength gradient instead of a
     1/len sliver). The flag is part of the model's STORE identity
     like num_buckets/ns. One explode + one (doc, feature) partial agg
-    + one per-doc list agg; pin the result (localCheckpoint) before a
+    + one per-doc list agg; pin the result before a
     multi-epoch training loop. A gram-less document carries only the
     bias entry. NULL labels raise in-plan — a silently-dropped or
     silently-0 label would bias the fit.

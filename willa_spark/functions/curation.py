@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..pin import pin
 from ._guards import check_cols_tuple
 from .corpus import _pseudo_lines, _tokens
 from .dedup import shingles
@@ -976,22 +977,10 @@ def _two_phase_prefix_sum(
     precedes every row of a later one.
 
     Plan: ``counted`` (a narrow post-projection frame — never raw
-    text) is eagerly checkpointed so the local-window pass and the
-    per-piece totals read ONE materialization instead of scanning and
-    re-deriving the source twice; checkpoint blocks release on GC of
-    the result. Fault-tolerance trade at cluster scale:
-    ``localCheckpoint`` truncates lineage into EXECUTOR-LOCAL blocks,
-    so losing an executor mid-job fails the job instead of recomputing
-    (acceptable in local mode and for retry-from-scratch batch jobs).
-    Pass ``spill_dir`` for the durable form: the narrow frame is
-    written to storage once and re-read — the same one-scan plan with
-    recomputable blocks, the right choice for a long multi-hour
-    cluster run (the ``embedding_near_dups`` spill discipline)."""
-    if spill_dir is not None:
-        counted.write.mode("overwrite").parquet(spill_dir)
-        counted = counted.sparkSession.read.parquet(spill_dir)
-    else:
-        counted = counted.localCheckpoint(eager=True)
+    text) is pinned so the local-window pass and the per-piece totals
+    read ONE materialization instead of re-deriving the source twice.
+    Pass ``spill_dir`` for the durable form (a long cluster run)."""
+    counted = pin(counted, "two-phase prefix sum: counted", spill_dir=spill_dir)
     return _two_phase_from_pinned(
         counted, strata_col, piece_cols, piece_order, row_order, value_col
     )

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
+from ..pin import pin
 from .text import fingerprint
 
 
@@ -247,19 +248,10 @@ def minhash_candidate_pairs(
     positives."""
     sig = minhash_signature_frame(df, text_col, id_col, num_hashes, shingle_n)
     banded = banded_signature_frame(sig, num_hashes, num_bands)
-    # EAGER materialization before the self-join: Spark does NOT reuse
-    # the two alias sides' subtrees (no ReusedExchange across a
-    # self-join), and a LAZY persist is not enough — the join's two
-    # shuffle-map stages are submitted concurrently within the first
-    # action and BOTH race-compute the k-hash signature aggregate
-    # before the cache fills (profiled at sf0.1: two identical ~4.2 s
-    # jobs per execution). localCheckpoint computes it exactly once,
-    # truncates the lineage, and its blocks release on GC of the result
-    # instead of leaking a CacheManager entry per call (same discipline
-    # as hamming_block_pairs / winnow_overlap_pairs). The banded frame
-    # is (id, 2 ints) × bands per doc — tiny relative to the corpus, so
-    # materializing it is safe at any scale (unlike the shingle frames).
-    banded = banded.localCheckpoint(eager=True)
+    # feeds both sides of the self-join (profiled at sf0.1: two
+    # identical ~4.2 s signature jobs per execution unpinned); (id, 2
+    # ints) × bands per doc, small relative to the corpus
+    banded = pin(banded, "minhash_candidate_pairs: banded signatures")
     left = banded.alias("l")
     right = banded.alias("r")
     return (
@@ -337,14 +329,10 @@ def verified_near_dups(
     candidates = candidates.persist()
     candidates.count()
     sh = _candidate_shingles(df, candidates, text_col, id_col, shingle_n)
-    # EAGER: sh feeds BOTH pair sides below and Spark reuses no
-    # subtrees across them — lazily, each side re-runs the corpus
-    # semi-join AND re-shingles every candidate doc (profiled at
-    # sf0.1: ~2× the whole verification cost in duplicated jobs).
-    # The frame is candidate-involved docs only (ids semi-join), so
-    # materializing it is bounded by the candidate count, not the
-    # corpus; localCheckpoint blocks release on GC of the result.
-    sh = sh.localCheckpoint(eager=True)
+    # feeds both pair sides below; unpinned, each re-runs the corpus
+    # semi-join and re-shingles every candidate doc. Bounded by the
+    # candidate count, not the corpus.
+    sh = pin(sh, "verified_near_dups: candidate shingles")
     a = sh.select(F.col("__id").alias("id_a"), F.col("__sh").alias("sh_a"))
     b = sh.select(F.col("__id").alias("id_b"), F.col("__sh").alias("sh_b"))
     return (
@@ -464,12 +452,10 @@ def hamming_block_pairs(
     ``bit_count`` filter removes the extras. The kernel itself
     enforces the pigeonhole invariant (``check_pigeonhole``) so a
     direct caller cannot silently lose recall. The block frame is
-    pinned with an EAGER localCheckpoint — the self-join would
-    otherwise run the (Pandas-UDF or decode) signature builder once
-    per alias side, and unlike a ``persist`` the blocks release on GC
-    of the result instead of leaking one cache entry per call."""
+    pinned: the self-join would otherwise run the (Pandas-UDF or
+    decode) signature builder once per alias side."""
     check_pigeonhole(max_hamming, num_blocks)
-    blocks = simhash_block_frame(sig, num_blocks).localCheckpoint(eager=True)
+    blocks = pin(simhash_block_frame(sig, num_blocks), "hamming_block_pairs")
     l, r = blocks.alias("l"), blocks.alias("r")
     cand = (
         l.join(
@@ -576,12 +562,8 @@ def winnow_overlap_pairs(
             .filter(F.col("df") <= df_cap)
         )
         fp = raw.join(rare.select("fp"), "fp", "left_semi")
-    # pin the (capped) fingerprint frame eagerly so (a) the self-join's
-    # two scans don't each recompute the winnowing pass and (b) no
-    # CacheManager entry outlives this call — checkpoint blocks are
-    # released by the ContextCleaner once the caller drops the result,
-    # unlike a .persist() the caller has no handle to release
-    fp = fp.localCheckpoint(eager=True)
+    # the self-join's two scans would each recompute the winnowing pass
+    fp = pin(fp, "winnow_overlap_pairs: fingerprints")
     if df_cap is not None:
         raw.unpersist()  # capped frame materialized; release the raw pass
     return winnow_pair_counts(fp).withColumnRenamed(
@@ -777,7 +759,7 @@ def dup_clusters(
     O(log diameter) rounds: each round is two equi-joins + a partial
     min-aggregate, all keyed shuffles — no driver-side graph. Label
     state persists per round with the previous round unpersisted, and
-    ``localCheckpoint`` truncates the growing lineage (the standard
+    each round's pin truncates the growing lineage (the standard
     Spark iterative-algorithm discipline).
 
     Raises after ``max_iters`` non-converged rounds rather than
@@ -940,7 +922,7 @@ def _cc_round(edges: DataFrame, labels: DataFrame, target: int):
     obs = Observation()
     new_labels = jumped.observe(
         obs, F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-    ).localCheckpoint(eager=True)
+    ).transform(pin, "dup_clusters: label round")
     labels.unpersist()
     return new_labels, obs
 
@@ -976,8 +958,7 @@ def keep_best(
     winner election is two partial aggregates over that small frame,
     and the corpus is touched once by the final anti-join — the full
     corpus is never scored or reshuffled. The member frame feeds
-    three downstream plans (best / winners / drop) and Spark does not
-    reuse subtrees, so it is pinned with an eager localCheckpoint
+    three downstream plans (best / winners / drop), so it is pinned
     (pairs-sized: 3 narrow columns per clustered doc) — without it
     the corpus join + score expression would run three times."""
     member = (
@@ -987,7 +968,7 @@ def keep_best(
             clusters["id"].alias("__m_id"),
             score.alias("__s"),
         )
-        .localCheckpoint(eager=True)
+        .transform(pin, "keep_best: cluster members")
     )
     drop = best_member_drops(member)
     return df.join(drop, df[id_col] == F.col("__drop_id"), "left_anti")
@@ -1004,7 +985,7 @@ def best_member_drops(member: DataFrame) -> DataFrame:
     tie-break/NULL policy the congruity tests pin cannot drift between
     the engines (r15 review: it existed as two line-for-line copies).
     The caller pins ``member`` because it feeds three downstream plans
-    (best / winners / drop) and Spark does not reuse subtrees."""
+    (best / winners / drop)."""
     best = member.groupBy("cluster_id").agg(F.max("__s").alias("__smax"))
     # eqNullSafe: an all-NULL-score cluster matches every member and
     # the min-id tie-break below becomes the canonical fallback

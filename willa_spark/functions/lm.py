@@ -48,6 +48,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..pin import pin, pin_all
 from ._guards import check_cols_tuple
 
 BOS = "<s>"
@@ -390,7 +391,6 @@ def bigram_perplexity(
     id_col: str = "doc_id",
     text_col: str = "text",
     broadcast_max_rows: int = BROADCAST_MODEL_MAX_ROWS,
-    model_pinned: bool = False,
 ) -> DataFrame:
     """(id, n_transitions, ppl) — per-document conditional perplexity
     under a FROZEN ``bigram_lm_train`` model: ppl = exp(−Σ ln P(w2|w1)
@@ -411,17 +411,12 @@ def bigram_perplexity(
 
     The model frame has multiple consumers here (the logp
     precomputes, the totals agg, the broadcast-gate count), so it is
-    PINNED first — unpinned, each consumer re-runs the model's whole
-    lineage, which for a ``bigram_lm_train`` frame is the
-    corpus-scale training shuffle per consumer (caught by the r12
-    plan audit). ``model_pinned=True`` skips the pin when the CALLER
-    already materialized THIS SAME frame (reusing a pin of the same
-    frame is sound; the classifier ``already_pinned`` bug was reusing
-    a DIFFERENT frame's pin that sat below more lineage). Scoring
-    many batches under one frozen model? Use ``make_bigram_scorer``
-    — it builds and PINS these tables once instead of per call."""
-    if not model_pinned:
-        model = model.localCheckpoint(eager=True)
+    PINNED first (a no-op when the caller already pinned it) —
+    unpinned, each consumer re-runs the corpus-scale training shuffle
+    of a ``bigram_lm_train`` frame. Scoring many batches under one
+    frozen model? Use ``make_bigram_scorer`` — it builds and PINS
+    these tables once instead of per call."""
+    model = pin(model, "bigram LM: model")
     plan = _jm_plan(model, lam, alpha)
     return _apply_plan(
         docs, plan, id_col, text_col, model.count() <= broadcast_max_rows
@@ -436,7 +431,6 @@ def kn_bigram_perplexity(
     id_col: str = "doc_id",
     text_col: str = "text",
     broadcast_max_rows: int = BROADCAST_MODEL_MAX_ROWS,
-    model_pinned: bool = False,
 ) -> DataFrame:
     """(id, n_transitions, ppl) — per-document perplexity under
     interpolated Kneser-Ney smoothing (Chen & Goodman 1999 — the
@@ -472,8 +466,7 @@ def kn_bigram_perplexity(
     split the corpus-scale frame into a multi-consumer fork and cost
     a pin — worse below ~50% miss rates). Scoring many batches under
     one frozen model? Use ``make_bigram_scorer``."""
-    if not model_pinned:
-        model = model.localCheckpoint(eager=True)
+    model = pin(model, "bigram LM: model")
     plan = _kn_plan(model, alpha, discount)
     return _apply_plan(
         docs, plan, id_col, text_col, model.count() <= broadcast_max_rows
@@ -489,7 +482,6 @@ def bigram_group_cross_entropy(
     id_col: str = "doc_id",
     text_col: str = "text",
     broadcast_max_rows: int = BROADCAST_MODEL_MAX_ROWS,
-    model_pinned: bool = False,
     scorer: str = "jm",
     discount: float | None = None,
 ) -> DataFrame:
@@ -523,8 +515,7 @@ def bigram_group_cross_entropy(
     kl_divergence_profile convention: a NULL group would pool every
     unlabeled doc into one phantom domain row)."""
     _check_scorer_knobs(scorer, lam, discount)
-    if not model_pinned:
-        model = model.localCheckpoint(eager=True)
+    model = pin(model, "bigram LM: model")
     plan = (
         _jm_plan(model, lam, alpha)
         if scorer == "jm"
@@ -635,42 +626,29 @@ def _frozen_plan(
     ``(plan, do_broadcast)`` ready for per-batch ``_apply_plan`` /
     ``_group_lp_stats`` calls that pay only corpus-side work."""
     _check_scorer_knobs(scorer, lam, discount)
-    model = model.localCheckpoint(eager=True)
+    model = pin(model, "bigram LM: model")
     do_broadcast = model.count() <= broadcast_max_rows
     plan = (
         _jm_plan(model, lam, alpha)
         if scorer == "jm"
         else _kn_plan(model, alpha, discount)
     )
-    # The derived tables are independent per-row derivations of the
-    # ALREADY-PINNED model, so their pins can run as concurrent jobs
-    # instead of 3-4 sequential ones — and inside the broadcast gate
-    # each is vocabulary-sized and about to be broadcast anyway, so
-    # coalesce(1) turns each pin from a model-shuffle-width tasklet
-    # swarm into one task (measured: the sequential 32-task pins cost
-    # ~1.2 s of pure per-job scheduling on a 973-row model). coalesce
-    # merges output partitions only — every value is computed per-row
-    # from exact counts before it applies — and the empty/degenerate
-    # model guards still evaluate here, at construction, surfacing
-    # from whichever concurrent pin hits them first.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _pin(tab: DataFrame) -> DataFrame:
-        return (tab.coalesce(1) if do_broadcast else tab).localCheckpoint(
-            eager=True
-        )
-
-    with ThreadPoolExecutor(max_workers=4) as ex:
-        join_futs = [ex.submit(_pin, tab) for tab, _ in plan["joins"]]
-        scalars_fut = ex.submit(_pin, plan["scalars"])
-        plan = {
-            "joins": [
-                (fut.result(), keys)
-                for fut, (_, keys) in zip(join_futs, plan["joins"])
-            ],
-            "scalars": scalars_fut.result(),
-            "lp": plan["lp"],
-        }
+    # The derived tables are independent derivations of the pinned
+    # model, so they pin concurrently. Inside the broadcast gate each
+    # is vocabulary-sized and about to be broadcast, so coalesce(1)
+    # makes each pin one task instead of a model-shuffle-width swarm
+    # (sequential 32-task pins cost ~1.2 s of scheduling on a 973-row
+    # model). The degenerate-model guards still raise here.
+    tabs = [tab for tab, _ in plan["joins"]] + [plan["scalars"]]
+    *joins, scalars = pin_all(
+        [tab.coalesce(1) if do_broadcast else tab for tab in tabs],
+        "bigram LM: frozen tables",
+    )
+    plan = {
+        "joins": [(tab, keys) for tab, (_, keys) in zip(joins, plan["joins"])],
+        "scalars": scalars,
+        "lp": plan["lp"],
+    }
     return plan, do_broadcast
 
 

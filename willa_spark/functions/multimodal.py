@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..pin import pin
+
 IMAGE_META_SCHEMA = T.StructType(
     [
         T.StructField("width", T.IntegerType()),
@@ -755,10 +757,9 @@ def audio_segment_pairs(
                 .filter(F.col("df") <= seg_df_cap)
             )
             fp = raw.join(rare.select("fp"), "fp", "left_semi")
-        # eager pin: the self-join scans the fp frame twice, and the
-        # Python decode behind it must not run twice (same discipline
-        # as video_fingerprint_pairs)
-        fp = fp.localCheckpoint(eager=True)
+        # the self-join scans the fp frame twice, and the Python
+        # decode behind it must not run twice
+        fp = pin(fp, "audio_fingerprint_pairs: fingerprints")
     finally:
         if raw is not None:
             raw.unpersist()
@@ -904,10 +905,9 @@ def video_fingerprint_pairs(
                 .filter(F.col("df") <= frame_df_cap)
             )
             fp = raw.join(rare.select("fp"), "fp", "left_semi")
-        # eager pin: the self-join scans the frame frame twice, and the
-        # Python decode behind it must not run twice (same discipline
-        # as winnow_overlap_pairs)
-        fp = fp.localCheckpoint(eager=True)
+        # the self-join scans the fp frame twice, and the Python
+        # decode behind it must not run twice
+        fp = pin(fp, "video_fingerprint_pairs: fingerprints")
     finally:
         # unpersist on the error path too — a raising semi-join or
         # checkpoint must not leak a cache entry per failed call

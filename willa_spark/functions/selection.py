@@ -36,11 +36,10 @@ Two feature spaces:
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..pin import pin
 from .dedup import shingles
 from .lm import DEFAULT_ALPHA as LM_DEFAULT_ALPHA
 from .lm import DEFAULT_LAMBDA as LM_DEFAULT_LAMBDA
@@ -261,13 +260,11 @@ def dsir_select(
     selecting zero-weight docs first). Returns (id, n_grams,
     log_weight, sample_key) for the selected docs.
 
-    The corpus's (id, feature, cnt) frame is built ONCE and eagerly
-    pinned — it feeds both the raw model and the scoring join, and
-    Spark does not reuse subtrees (an unpinned frame would re-run the
-    corpus explode + shuffle twice; the ``winnow_overlap_pairs``
-    discipline). The rank is a single global top-k — Spark executes
-    the row_number window with a partial per-partition top-k pushed
-    before the single-partition sort (the same shape every
+    The corpus's (id, feature, cnt) frame is built ONCE and pinned —
+    it feeds both the raw model and the scoring join. The rank is a
+    single global top-k — Spark executes the row_number window with a
+    partial per-partition top-k pushed before the single-partition
+    sort (the same shape every
     ``_rank_topk`` consumer accepts for bounded k). For huge k,
     threshold on ``sample_key`` instead (one approx-quantile pass)."""
     if not temperature > 0.0:
@@ -276,8 +273,8 @@ def dsir_select(
             "use a small positive value (1e-9) for deterministic "
             "top-k-by-weight selection"
         )
-    feats = _gram_features(docs, num_buckets, ns, id_col, text_col).localCheckpoint(
-        eager=True
+    feats = _gram_features(docs, num_buckets, ns, id_col, text_col).transform(
+        pin, "dsir_select: corpus features"
     )
     raw_model = _model_from_features(feats, num_buckets, DEFAULT_SMOOTH)
     target_model = feature_log_probs(
@@ -516,7 +513,6 @@ def kl_divergence_profile(
     text_col: str = "text",
     top_v: int | None = None,
     min_count: int = 1,
-    pin: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """(group, n_grams, kl_to_corpus) — each stratum's smoothed
     KL divergence from the whole-corpus gram distribution, the
@@ -552,14 +548,8 @@ def kl_divergence_profile(
     space is the monitoring contract, like DSIR's hashed buckets).
     Truncation filters the vocabulary-sized frame, never re-touches
     the corpus; with both at their defaults the plan is unchanged.
-
-    ``pin`` (default None → eager localCheckpoint) is the
-    multi-consumer materialization hook for the (group, gram) frame
-    — the default runs a corpus-scale job at CALL time and holds
-    executor-storage residency for the session; a 100 TB / batch-twin
-    caller passes a parquet-spill pin (the ``corpus_pipeline``
-    ``spill_dir`` pattern) or ``lambda df: df`` to stay lazy and
-    accept the per-consumer re-derivation (r12 advice)."""
+    The (group, gram) frame is pinned, so the call runs one
+    corpus-scale job."""
     checked_group = F.when(
         F.col(group_col).isNull(),
         F.raise_error(
@@ -585,23 +575,11 @@ def kl_divergence_profile(
     per_group = g.groupBy("__grp", "feature").agg(
         F.count(F.lit(1)).alias("__cg")
     )
-    # PIN the (group, gram) frame: everything downstream — corpus
-    # counts, the group list, totals, the generate-join — derives
-    # from it, and Spark does not reuse subtrees, so unpinned each
-    # consumer re-ran the corpus explode + agg (the r12 plan audit
-    # measured 8 corpus scans / 27 exchanges on the truncated path;
-    # 2 scans / 10 exchanges after the pin). The frame is
-    # groups × vocabulary-sized — the docstring's "the corpus enters
-    # once" claim is this pin. ``pin`` (the corpus_pipeline pin=
-    # pattern, r12 advice) lets a 100 TB/batch-twin caller re-point
-    # the materialization at a parquet stage spill, or pass an
-    # identity callable to stay fully lazy (accepting the
-    # re-derivation) — the default eager localCheckpoint executes a
-    # corpus-scale job AT CALL TIME and holds executor-storage
-    # residency for the session.
-    per_group = (
-        per_group.localCheckpoint(eager=True) if pin is None else pin(per_group)
-    )
+    # everything downstream (corpus counts, the group list, totals,
+    # the generate-join) derives from this groups × vocabulary frame;
+    # unpinned, the truncated path ran 8 corpus scans / 27 exchanges
+    # (2 / 10 pinned) — "the corpus enters once" is this pin
+    per_group = pin(per_group, "kl_divergence_profile: (group, gram) counts")
     # corpus counts DERIVE from the per-group frame — this second agg
     # works the (groups x vocab) table, not the corpus
     corpus = per_group.groupBy("feature").agg(F.sum("__cg").alias("__c"))
@@ -696,7 +674,6 @@ def domain_mixture_weights(
     alpha: float = LM_DEFAULT_ALPHA,
     id_col: str = "doc_id",
     text_col: str = "text",
-    model_pinned: bool = False,
     scorer: str = "jm",
     discount: float | None = None,
 ) -> DataFrame:
@@ -722,15 +699,12 @@ def domain_mixture_weights(
 
     ``model`` defaults to the corpus's own ``bigram_lm_train`` frame
     (the self-scored convention of lm_perplexity / dsir_weights);
-    pass a target-trained frame for the production shape, with
-    ``model_pinned=True`` when the caller already materialized THAT
-    SAME frame (the lm.py rule: the passthrough skips a second
-    full materialization + duplicate executor residency; reusing a
-    pin of a DIFFERENT frame is the classifier ``already_pinned``
-    bug, don't). ``scorer="kn"`` switches the reference model's
-    smoothing to interpolated Kneser-Ney (the KenLM form —
-    ``discount`` applies there; cross-scorer knobs fail loud, the
-    lm.py rule), so the excess-loss signal matches the production
+    pass a target-trained frame for the production shape (a frame
+    that is already pinned is not pinned again). ``scorer="kn"``
+    switches the reference model's smoothing to interpolated
+    Kneser-Ney (the KenLM form — ``discount`` applies there;
+    cross-scorer knobs fail loud, the lm.py rule), so the
+    excess-loss signal matches the production
     perplexity rows.
 
     Plan/scale shape: ONE corpus transition explode + broadcast-gated
@@ -745,7 +719,6 @@ def domain_mixture_weights(
     eta_ = float(eta)
     if model is None:
         model = bigram_lm_train(docs.select(id_col, text_col))
-        model_pinned = False  # freshly-built lineage, never pre-pinned
     per = bigram_group_cross_entropy(
         docs,
         model,
@@ -754,7 +727,6 @@ def domain_mixture_weights(
         alpha=alpha,
         id_col=id_col,
         text_col=text_col,
-        model_pinned=model_pinned,
         scorer=scorer,
         discount=discount,
     )
@@ -771,11 +743,10 @@ def mixture_weights_from_stats(
     the tilt/normalize arithmetic cannot drift between the twins.
     The frame is domain-cardinality-sized but its lineage may be the
     corpus-scale scoring plan, and THREE consumers read it (corpus
-    totals, the raw-weight projection, the normalizer) — pinned here
-    (the multi-consumer rule; same class as the kl_profile per_group
-    pin)."""
+    totals, the raw-weight projection, the normalizer) — pinned
+    here."""
     eta_ = float(eta)
-    per = per.localCheckpoint(eager=True)
+    per = pin(per, "mixture_weights_from_stats: per-domain stats")
     tot = per.agg(
         F.sum("n_transitions").cast("double").alias("__N"),
         # corpus ce = token-weighted mean of the domain ces — derived
@@ -818,7 +789,6 @@ def domain_mixture_trajectory(
     alpha: float = LM_DEFAULT_ALPHA,
     id_col: str = "doc_id",
     text_col: str = "text",
-    model_pinned: bool = False,
     scorer: str = "jm",
     discount: float | None = None,
     max_groups: int = 100_000,
@@ -866,7 +836,6 @@ def domain_mixture_trajectory(
         )
     if model is None:
         model = bigram_lm_train(docs.select(id_col, text_col))
-        model_pinned = False  # freshly-built lineage, never pre-pinned
     per = bigram_group_cross_entropy(
         docs,
         model,
@@ -875,7 +844,6 @@ def domain_mixture_trajectory(
         alpha=alpha,
         id_col=id_col,
         text_col=text_col,
-        model_pinned=model_pinned,
         scorer=scorer,
         discount=discount,
     )

@@ -23,6 +23,7 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..pin import pin
 from ._fastlit import lit_double_rows, lit_doubles
 
 
@@ -385,13 +386,11 @@ def train_centroids(
     ``n_iters`` rounds of assign (Column exprs) + recompute (groupBy
     avg — a partial aggregate, one small shuffle per round). Centroid
     count stays fixed: empty cells keep their previous centroid."""
-    # pinned ONCE (the pq_train discipline): the frame feeds the init
-    # collect plus n_iters assignment/means passes — unpinned, every
-    # action re-ran the caller's upstream lineage (scan + any spread
-    # repartition + the cast) once per Lloyd round
+    # feeds the init collect plus n_iters assignment/means passes;
+    # unpinned, every Lloyd round re-ran the caller's upstream lineage
     c = corpus.select(
         F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
-    ).localCheckpoint(eager=True)
+    ).transform(pin, "train_centroids: corpus")
     init_rows = c.orderBy("id").limit(n_centroids).collect()
     centroids = [list(r["v"]) for r in init_rows]
     dim = len(centroids[0])
@@ -534,8 +533,7 @@ def embedding_near_dups(
     threshold. Output: id_a, id_b, cosine_sim.
 
     The bucketed (id, vector, bucket) frame feeds BOTH sides of the
-    self-join and Spark does not reuse subtrees across alias sides, so
-    it must be materialized once. Default: executor-memory persist
+    self-join, so it is pinned once. Default: a local checkpoint
     (right for bench-sized corpora). Pass ``spill_dir`` for the 100 TB
     path: the frame is written to storage once and both join sides
     scan the parquet — no corpus-size memory cache, and the scan
@@ -563,22 +561,13 @@ def _vector_near_dup_pairs(
     k-means-cell blocking differ ONLY in ``key_builder`` — the batch
     twin of ``streaming.ann._vector_dedup_step``): keyed self-join
     candidates, exact cosine verify with the ROUND-then-compare
-    predicate both engines share, materialize-once contract
-    (persist, or ``spill_dir`` for the storage-backed path)."""
+    predicate both engines share, one pin of the keyed frame (a local
+    checkpoint, or ``spill_dir`` for the storage-backed path)."""
     v = df.select(
         F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
     ).withColumn("__key", key_builder(F.col("v")))
-    if spill_dir:
-        v.write.mode("overwrite").parquet(spill_dir)
-        v = df.sparkSession.read.parquet(spill_dir)
-    else:
-        # EAGER: the self-join's two shuffle-map stages are submitted
-        # concurrently within one action, so a lazy persist lets both
-        # race-compute the key-builder projection before the cache
-        # fills (the same duplication profiled on the minhash banded
-        # frame). localCheckpoint computes it once and releases on GC
-        # of the result — no CacheManager entry outlives the call.
-        v = v.localCheckpoint(eager=True)
+    # feeds both sides of the self-join
+    v = pin(v, "vector near-dup keys", spill_dir=spill_dir or None)
     l, r = v.alias("l"), v.alias("r")
     return (
         l.join(

@@ -26,6 +26,7 @@ from .operators import Aggregate, HoppingWindow, SessionWindow, TumblingWindow
 from .operators.aggregates import SEQ
 from .operators.tables import latest_per_key
 from .operators.windows import WINDOW_START, assign_session_windows, assign_time_windows
+from .pin import pin, pin_all
 from .functions import corpus as CORPUS
 from .functions import curation as CURATION
 from .functions import dedup as D
@@ -3228,8 +3229,8 @@ def q_packed_shard_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     loader contract checked against the bytes a loader would read,
     not against the plan that produced them. Mirrors how the
     reference proves sinks end-to-end (core_test.clj:53-69 asserts
-    per-sink outputs). The result frame is eagerly pinned
-    (localCheckpoint) so the temp dir can be deleted before return."""
+    per-sink outputs). The result frame is pinned so the temp dir can
+    be deleted before return."""
     import shutil
     import tempfile
 
@@ -3251,7 +3252,7 @@ def q_packed_shard_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("doc_id").cast("bigint").alias("last_doc"),
             F.sum("start_in_seq").cast("bigint").alias("start_sum"),
         )
-        return agg.localCheckpoint(eager=True)
+        return pin(agg, "packed_shard_roundtrip")
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
@@ -3324,7 +3325,7 @@ def q_packed_sequences_loaded(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_tokens",
             "n_slices",
         )
-        return seqs.localCheckpoint(eager=True)
+        return pin(seqs, "packed_sequences_loaded")
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
@@ -3599,9 +3600,8 @@ def _precision_sig_rows(
     counts originals whose near-miss twin was (wrongly) emitted — the
     oracle asserts 0; n_true_found must equal n_planted.
 
-    ``sig`` is EAGERLY pinned first (the video dual's discipline): it
-    fans out to four consumers (corpus branch, both twin branches, the
-    n_planted count) and Spark does not reuse subtrees — unpinned, the
+    ``sig`` is pinned first: it fans out to four consumers (corpus
+    branch, both twin branches, the n_planted count) — unpinned, the
     image/audio callers' mapInPandas decode ran ~4× per gate run. The
     pinned frame is (id, 8-byte hash) rows — tiny at any corpus size.
     The true/false counts share ONE conditional aggregate for the same
@@ -3617,7 +3617,7 @@ def _precision_sig_rows(
     the output — the verify itself is a stronger precision proof than
     any planted dual, and ``recall_minhash``'s oracle already pins
     that verify's arithmetic (jaccard = 1.0 on exact copies)."""
-    sig = sig.localCheckpoint(eager=True)
+    sig = pin(sig, "hamming precision: signatures")
     mask = (1 << (max_hamming + 1)) - 1
     planted = sig.filter(F.col("id") % modulus == 0)
     exact = planted.select((F.col("id") + _P_OFF1).alias("id"), "simhash")
@@ -3737,7 +3737,7 @@ def q_precision_video_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fpf = decode_video_fp_frame(
         clips, id_col="doc_id", decoder=fake_video_decoder
-    ).localCheckpoint(eager=True)
+    ).transform(pin, "precision_video_fp: fingerprints")
     planted_fp = fpf.filter(F.col("id") % 30 == 0)
     exact = planted_fp.select((F.col("id") + _P_OFF1).alias("id"), "fp")
     miss = (
@@ -3805,7 +3805,7 @@ def q_precision_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _recall_docs(spark, sf_dir)
     n_tok = F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
     eligible = docs.filter((F.col("doc_id") % 20 == 0) & (n_tok >= 5))
-    fpf = D.winnow_fingerprint_frame(eligible).localCheckpoint(eager=True)
+    fpf = D.winnow_fingerprint_frame(eligible).transform(pin, "precision_winnow")
     exact = fpf.select((F.col("id") + _P_OFF1).alias("id"), "fp")
     miss = (
         fpf.groupBy("id")
@@ -3865,7 +3865,7 @@ def q_precision_audio_seg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fpf = decode_audio_segment_fp_frame(
         clips, id_col="doc_id", decoder=fake_audio_decoder_pcm
-    ).localCheckpoint(eager=True)
+    ).transform(pin, "precision_audio_seg: fingerprints")
     planted_fp = fpf.filter(F.col("id") % 35 == 0)
     exact = planted_fp.select((F.col("id") + _P_OFF1).alias("id"), "fp")
     miss = (
@@ -3943,7 +3943,7 @@ def q_precision_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb, ann_q, _planted = _ann_recall_parts(spark, sf_dir, spread=True)
     lsh = SIM.lsh_topk(
         emb, ann_q, k=10, n_planes=4, n_tables=8, n_probes=2
-    ).localCheckpoint(eager=True)
+    ).transform(pin, "precision_ann_lsh: lsh top-k")
     n_q = ann_q.agg(F.count(F.lit(1)).cast("bigint").alias("n_queries"))
     n_rank1 = lsh.filter(
         (F.col("rank") == 1) & (F.col("vec_id") == F.col("query_id"))
@@ -4288,40 +4288,29 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions import selection as SELECTION
 
     docs = read_docs_spread(spark, sf_dir).select("doc_id", "text")
-    # pin the corpus feature frame once — it feeds the raw model, the
-    # TARGET model (the seed is a subset of the corpus, so its feature
-    # rows are already here — no second tokenize pass), and the
-    # scoring join (dsir_select's own discipline)
+    # the corpus feature frame feeds the raw model, the TARGET model
+    # (the seed is a subset of the corpus, so no second tokenize pass)
+    # and the scoring join
     feats = SELECTION._gram_features(
         docs, None, (1, 2), "doc_id", "text"
-    ).localCheckpoint(eager=True)
-    # pin BOTH model frames too (r15): each model feeds TWO broadcast
-    # subqueries downstream (the scoring join + its _floor_guarded
-    # scalar), and Spark does not reuse subtrees across broadcast
-    # exchanges — unpinned, the vocab-keyed model aggregation over the
-    # pinned gram frame ran up to 4x concurrently per action (profiled:
-    # 6 heavy 32-task broadcast-build jobs, ~19 s of task time on the
-    # calibration row). Models are vocab-sized — the streaming twin
-    # (streaming/selection.py) has always pinned them.
-    # The two models are independent aggregations of the SAME pinned
-    # feature frame, so their pins run as concurrent jobs (the
-    # lm._frozen_plan discipline) instead of back-to-back ones.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        tgt_fut = ex.submit(
-            lambda: SELECTION._model_from_features(
+    ).transform(pin, "dsir_weights: corpus features")
+    # each model feeds TWO broadcast subqueries downstream (the scoring
+    # join + its _floor_guarded scalar), which share no subtrees —
+    # unpinned, the model aggregation ran up to 4x per action (6 heavy
+    # broadcast-build jobs, ~19 s of task time on the calibration row)
+    tgt_model, raw_model = pin_all(
+        [
+            SELECTION._model_from_features(
                 feats.filter(F.col("id") % 13 == 0),
                 None,
                 SELECTION.DEFAULT_SMOOTH,
-            ).localCheckpoint(eager=True)
-        )
-        raw_fut = ex.submit(
-            lambda: SELECTION._model_from_features(
+            ),
+            SELECTION._model_from_features(
                 feats, None, SELECTION.DEFAULT_SMOOTH
-            ).localCheckpoint(eager=True)
-        )
-        tgt_model, raw_model = tgt_fut.result(), raw_fut.result()
+            ),
+        ],
+        "dsir_weights: models",
+    )
     w = SELECTION.importance_log_weights(
         docs,
         tgt_model,
@@ -4668,14 +4657,11 @@ def q_perplexity_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions import selection as SELECTION
 
     docs = read_docs_spread(spark, sf_dir).select("doc_id", "text")
-    # pinned (r15): the model feeds TWO broadcast subqueries in
-    # cross_entropy_score (the scoring join + the floor scalar), and
-    # broadcast exchanges never share subtrees — unpinned, the seed
-    # tokenize+explode+model agg ran twice per action (the
-    # q_dsir_weights model-pin rationale; vocab-sized frame)
+    # the model feeds TWO broadcast subqueries in cross_entropy_score
+    # (the scoring join + the floor scalar), which share no subtrees
     model = SELECTION.feature_log_probs(
         docs.filter(F.col("doc_id") % 13 == 0), num_buckets=None
-    ).localCheckpoint(eager=True)
+    ).transform(pin, "perplexity_bands: target model")
     scored = SELECTION.cross_entropy_score(docs, model, num_buckets=None)
     rounded = scored.select(
         "doc_id",
@@ -4709,30 +4695,9 @@ FROM embeddings WHERE vec_id % 100 = 0 AND vec_id < 2000
 """
 
 
-# One brute-force exact arm per (session, sf_dir, k): the PQ and
-# IVF-PQ band rows verify against an IDENTICAL ≤20-query baseline
-# (same corpus, same query filter, same k), so the second row reuses
-# the first's materialized ~k·20-row result instead of re-paying the
-# corpus-scale scoring pass (r11 verdict #3 — proof-overhead dedup,
-# not a semantics change: the arm is deterministic). The corpus
-# projection and the bounded query set are built INSIDE the helper
-# (r12 review: accepting them as parameters while keying only on
-# (appId, sf_dir, k) would hand a future caller with a DIFFERENT
-# query set the wrong ground truth on a silent cache hit — the key
-# must provably cover every input). Keyed by applicationId so a
-# fresh session (driver gate, tests) never reads another session's
-# pinned lineage; entries are ≤200 tiny rows, and inserts evict any
-# key from a DIFFERENT applicationId (r12 advice: a stopped app's
-# entries referenced dead-SparkContext checkpoints for the process
-# lifetime) — live size stays bounded by the handful of (sf_dir, k)
-# pairs the CURRENT session touches.
-_EXACT_ARM_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-
-
 def _ann_band_inputs(spark: SparkSession, sf_dir: str):
     """THE corpus projection + bounded query set the band rows and
-    their shared exact arm all derive from — one definition, so the
-    cache key (sf_dir, k) covers the arm's full input."""
+    their exact arm both derive from — one definition."""
     emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     q = emb.filter(
         (F.col("vec_id") % 100 == 0) & (F.col("vec_id") < 2000)
@@ -4743,37 +4708,19 @@ def _ann_band_inputs(spark: SparkSession, sf_dir: str):
 
 
 def _exact_arm(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
+    """The bounded-query brute-force baseline of the band rows."""
+    from .functions.dedup import _spread
     from .functions.similarity import brute_force_topk
 
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, k)
-    hit = _EXACT_ARM_CACHE.get(key)
-    if hit is not None:
-        return hit
-    # evict other sessions' entries on insert (r12 advice): a stopped
-    # application's keys would otherwise reference localCheckpointed
-    # frames of a dead SparkContext for the process lifetime — dead
-    # weight pinning driver-side references (tests cycle sessions)
-    for stale in [k_ for k_ in _EXACT_ARM_CACHE if k_[0] != app_id]:
-        del _EXACT_ARM_CACHE[stale]
     emb, q = _ann_band_inputs(spark, sf_dir)
     # brute force is pure per-row scoring (round-then-rank) — spread
     # the corpus side so the |corpus|×|queries| cosine pass
-    # parallelizes (read_emb_spread's scoring rationale); q stays on
-    # the band-inputs definition the cache key covers
-    from .functions.dedup import _spread
-
-    exact = (
-        brute_force_topk(_spread(emb, "vec_id"), q, k=k)
-        .select(
-            F.col("query_id").alias("qid"),
-            F.col("vec_id").alias("__xid"),
-            F.lit(1).alias("__hit"),
-        )
-        .localCheckpoint(eager=True)
+    # parallelizes (read_emb_spread's scoring rationale)
+    return brute_force_topk(_spread(emb, "vec_id"), q, k=k).select(
+        F.col("query_id").alias("qid"),
+        F.col("vec_id").alias("__xid"),
+        F.lit(1).alias("__hit"),
     )
-    _EXACT_ARM_CACHE[key] = exact
-    return exact
 
 
 def _ann_recall_bands(
@@ -4791,21 +4738,19 @@ def _ann_recall_bands(
     per-query recall@10 ≥ ``min_recall`` vs in-plan brute force, and
     the corpus-mean recall ≥ ``min_mean`` riding every row."""
     emb, q = _ann_band_inputs(spark, sf_dir)
-    # pinned: the approx frame feeds the top-1 check AND the recall
-    # join (multi-consumer rule); the exact arm is the bounded-query
-    # brute-force baseline, shared across the PQ rows via the cache —
-    # and INDEPENDENT of the approx build, so on a cache miss its
-    # scoring job runs concurrently under the quantizer-training
-    # chain's sequential collects instead of after them (the
-    # lm._frozen_plan discipline)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as ex:
-        exact_fut = ex.submit(_exact_arm, spark, sf_dir, k)
-        approx = approx_fn(emb, q, k).select(
-            F.col("query_id").alias("qid"), "vec_id", "rank"
-        ).localCheckpoint(eager=True)
-        exact = exact_fut.result()
+    # the approx frame feeds the top-1 check AND the recall join. The
+    # exact arm is independent of the approx build, so its scoring job
+    # runs under the quantizer-training chain's sequential collects
+    # instead of after them.
+    exact, approx = pin_all(
+        [
+            lambda: _exact_arm(spark, sf_dir, k),
+            lambda: approx_fn(emb, q, k).select(
+                F.col("query_id").alias("qid"), "vec_id", "rank"
+            ),
+        ],
+        f"{label}: exact and approximate arms",
+    )
     j = approx.join(
         F.broadcast(exact),
         (approx["qid"] == exact["qid"]) & (approx["vec_id"] == exact["__xid"]),
@@ -4960,7 +4905,7 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("term") != "")
         .groupBy("term")
         .agg(F.count(F.lit(1)).cast("bigint").alias("exact_count"))
-        .localCheckpoint(eager=True)  # feeds total, top-k, and probe
+        .transform(pin, "cms_heavy_hitters")  # feeds total, top-k, and probe
     )
     n_total = exact.agg(F.sum("exact_count").alias("__n"))
     top = exact.orderBy(F.col("exact_count").desc(), F.col("term")).limit(20)
@@ -5478,7 +5423,7 @@ def q_quality_classifier_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fv = CLS.doc_feature_vectors(
         labeled, num_buckets=1024, ns=(1,), label_col="label", binary=True
-    ).localCheckpoint(eager=True)
+    ).transform(pin, "quality_classifier_bands: feature vectors")
     w = CLS.train_logreg(fv, num_buckets=1024, epochs=6, lr=0.5)
     if not all(_math.isfinite(x) for x in w):
         raise ValueError(
@@ -6608,13 +6553,10 @@ def q_classifier_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    # pin the screened+deduped frame: doc_feature_vectors consumes
-    # its input TWICE (the label/carry base side and the gram-explode
-    # side of its internal join), and an unpinned input re-derives
-    # the whole screen+dedup chain on both arms — cost-neutral at
-    # proof scale, a full second corpus scan at 100 TB (the
-    # multi-consumer pin rule)
-    labeled = labeled.localCheckpoint(eager=True)
+    # doc_feature_vectors consumes its input twice (the label/carry
+    # base side and the gram-explode side of its internal join); each
+    # would re-derive the whole screen+dedup chain
+    labeled = pin(labeled, "classifier_curation: labeled docs")
     # num_buckets=256 / epochs=4 (the bands row trains 1024/6): the
     # tuned proof price — the per-epoch cost here is plan-compile of
     # the weight-literal array, so 256 buckets roughly halves the
@@ -6627,7 +6569,7 @@ def q_classifier_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         label_col="label",
         binary=True,
         carry_cols=("lang", "n_chars"),
-    ).localCheckpoint(eager=True)
+    ).transform(pin, "classifier_curation: feature vectors")
     wts = CLS.train_logreg(
         fv.filter(F.col("id") % 3 == 0), num_buckets=256, epochs=4, lr=0.5
     )

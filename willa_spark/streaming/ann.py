@@ -63,6 +63,7 @@ from ..functions.similarity import (
     _as_double,
     _centroid_sims,
 )
+from ..pin import pin
 from .store import store_append, store_compact_every, store_read
 
 
@@ -820,9 +821,8 @@ def _vector_dedup_step(
                 else cross_drop.unionByName(within_drop).distinct()
             )
             # pin the ids-only drop set so the cached bucket frame can
-            # be released before returning (no per-micro-batch cache
-            # buildup)
-            drops = drops.localCheckpoint(eager=True)
+            # be released before returning
+            drops = pin(drops, "vector dedup step: drops")
             admitted = pruned.join(
                 drops, pruned["id"] == F.col("__drop"), "left_anti"
             )

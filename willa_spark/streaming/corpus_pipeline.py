@@ -46,6 +46,7 @@ from ..functions.curation import (
 )
 from ..functions.dedup import dup_clusters, keep_canonical
 from ..functions.dedup import minhash_candidate_pairs, verified_near_dups
+from ..pin import pin
 from .near_dedup import minhash_dedup_step
 from .store import store_append, store_compact_every, store_read, store_read_batch
 
@@ -148,15 +149,6 @@ def _decontaminate_fuzzy(
     )
 
 
-def _pin_local(df: DataFrame) -> DataFrame:
-    """Default multi-consumer pin: eager localCheckpoint — right for
-    batch-sized streaming micro-batches. The batch twin at corpus
-    scale passes a parquet-spill pin instead (r11 advice: an eager
-    localCheckpoint of the whole cleaned corpus is a second
-    corpus-scale executor-storage residency on the 100 TB path)."""
-    return df.localCheckpoint(eager=True)
-
-
 def _decontaminate_semantic(
     docs: DataFrame,
     raw: DataFrame,
@@ -164,7 +156,7 @@ def _decontaminate_semantic(
     min_sim: float,
     id_col: str,
     vec_col: str,
-    pin=_pin_local,
+    spill_dir: str | None = None,
 ) -> DataFrame:
     """The SEMANTIC screen — embedding-cosine against the static eval
     embeddings (``curation.semantic_contamination_report``), catching
@@ -191,17 +183,11 @@ def _decontaminate_semantic(
     # PII / lexical-decontamination screens can't re-enter, so paying
     # |raw|×|eval| cosine volume for them is waste — semi-joining raw
     # to the cleaned frame's ids makes it |surviving|×|eval| (r10
-    # advice). Embeddings still ride the raw frame (the cleaned one
-    # projected down to (id, text) upstream). PIN the cleaned frame
-    # first: it has TWO consumers here (the semi-join's id side and
-    # the anti-join's left side) and its lineage is the whole unpinned
-    # screen/decontamination chain — without the pin each consumer
-    # re-executes the screens and the saving is repaid (r11 review;
-    # the multi-consumer rule). The RESULT stays lazy: the next
-    # multi-consumer boundary (classifier admission, dedup, the batch
-    # twin's persist/spill) pins for itself, so a single-consumer
-    # continuation never pays a second materialization here.
-    docs = pin(docs)
+    # advice). The cleaned frame feeds the semi-join's id side and
+    # the anti-join's left side, and its lineage is the whole screen
+    # chain, so it is pinned. The RESULT stays lazy: the next
+    # multi-consumer boundary pins for itself.
+    docs = pin(docs, "semantic screen: input", spill_dir=spill_dir)
     flagged = semantic_contamination_report(
         raw.select(id_col, vec_col).join(
             docs.select(id_col), id_col, "left_semi"
@@ -225,22 +211,18 @@ def _classifier_admit(
     binary: bool,
     id_col: str,
     text_col: str,
-    pin=_pin_local,
+    spill_dir: str | None = None,
 ) -> DataFrame:
     """The learned-quality admission screen — score the cleaned frame
     under a FROZEN trained classifier (functions/classifier.py; train
     batch-side on labeled examples, deploy the weight list) and keep
     docs at ``quality_prob ≥ min_prob``. Runs AFTER the deterministic
     screens and BEFORE dedup (junk should not pay signature costs).
-    The input frame is ALWAYS pinned — it feeds both the feature
-    build and the semi-join left side (the multi-consumer rule), and
-    when the semantic screen ran upstream its pin sat BELOW its
-    anti-join, so reusing it here would re-execute the
-    |surviving|×|eval| cosine subplan and the anti-join once per
-    consumer (r11 advice — the ``already_pinned`` short-circuit this
-    replaces was exactly that bug). Stateless per batch under static
-    weights, so batch ≡ streaming congruity holds structurally like
-    the other screens."""
+    The input frame is pinned — it feeds both the feature build and
+    the semi-join left side (the semantic screen's pin sits below its
+    anti-join, so it does not cover this frame). Stateless per batch
+    under static weights, so batch ≡ streaming congruity holds
+    structurally like the other screens."""
     if weights is None:
         return docs
     if len(weights) != int(num_buckets) + 1:
@@ -251,7 +233,7 @@ def _classifier_admit(
         )
     from ..functions.classifier import doc_feature_vectors, score_logreg
 
-    docs = pin(docs)
+    docs = pin(docs, "classifier screen: input", spill_dir=spill_dir)
     fv = doc_feature_vectors(
         docs, num_buckets=num_buckets, ns=ns,
         id_col=id_col, text_col=text_col, binary=binary,
@@ -317,7 +299,7 @@ def _lm_admit(
     score_fn,
     max_ppl: float | None,
     id_col: str,
-    pin=_pin_local,
+    spill_dir: str | None = None,
 ) -> DataFrame:
     """The LM-perplexity admission screen — score the cleaned frame
     under the FROZEN scorer built by ``_lm_scorer_or_none`` (train
@@ -326,12 +308,12 @@ def _lm_admit(
     perplexity distribution). Runs AFTER the learned classifier
     screen and BEFORE dedup, same slot logic: junk should not pay
     signature costs. The input frame is pinned first (it feeds the
-    transition explode AND the final semi-join — the multi-consumer
-    rule). Stateless per batch under a static model, so batch ≡
-    streaming congruity holds structurally."""
+    transition explode AND the final semi-join). Stateless per batch
+    under a static model, so batch ≡ streaming congruity holds
+    structurally."""
     if score_fn is None:
         return docs
-    docs = pin(docs)
+    docs = pin(docs, "LM screen: input", spill_dir=spill_dir)
     keep = (
         score_fn(docs).filter(F.col("ppl") <= max_ppl).select(id_col)
     )
@@ -819,11 +801,9 @@ def curation_to_shards_step(
 
     def step(batch_df: DataFrame, batch_id: int) -> DataFrame:
         admitted = curate(batch_df, batch_id)
-        # pin the curated frame: the packer consumes it more than once
-        # (high-water-mark aggregate + slice-row write), and without a
-        # materialization each consumption would re-run the screens +
-        # decontamination joins (the dedup drops are already pinned
-        # inside the dedup step; the screen projection is not).
+        # pin the curated frame: the packer consumes it twice
+        # (high-water-mark aggregate + slice-row write), and each
+        # would re-run the screens + decontamination joins.
         # eqNullSafe, not a plain equi-join: a NULL-id doc must REACH
         # the packer's fail-loud NULL-id guard (matching the batch
         # twin), not vanish in the strata re-join.
@@ -835,7 +815,7 @@ def curation_to_shards_step(
                 F.col(f"a.{id_col}").eqNullSafe(F.col(f"b.{id_col}")),
             )
             .select("a.*", F.col(f"b.{strata_col}"))
-            .localCheckpoint(eager=True)
+            .transform(pin, "curation_to_shards_step: curated batch")
         )
         return pack(with_strata, batch_id)
 
@@ -883,16 +863,9 @@ def corpus_curation_batch(
     without materialization the screen/redact projection would run
     three times. Default: executor-memory persist (bench-sized
     corpora). Pass ``spill_dir`` for the 100 TB path: the curated
-    corpus is written to storage once and every consumer scans the
-    parquet (the same discipline as ``embedding_near_dups``).
-    ``spill_dir`` also re-points the semantic/classifier screens'
-    multi-consumer pins at parquet stage spills (``_stage_*``
-    subdirectories) instead of eager localCheckpoints — on the 100 TB
-    path an executor-storage checkpoint of the whole cleaned corpus
-    is a second corpus-scale memory/disk-block residency the r11
-    advice flagged; a stage parquet is written once, scanned by each
-    consumer, and lives where the curated output already lives (the
-    batch twin's pins follow the batch twin's storage discipline).
+    corpus and the screens' pinned inputs are written there once as
+    parquet and every consumer scans the files, instead of holding
+    corpus-scale local checkpoints in executor storage.
     Layout under ``spill_dir``: the curated pre-dedup corpus lands in
     ``curated/`` (its own subdirectory, NOT the root: an overwrite of
     the root would delete the stage spills the still-lazy curated
@@ -900,23 +873,12 @@ def corpus_curation_batch(
     ``_stage_classifier_in/`` / ``_stage_lm_in/`` when the matching
     screens are enabled — the caller owns cleanup of the directory
     as a whole."""
-    if spill_dir is not None:
 
-        def _spill_pin(tag: str):
-            def pin(df: DataFrame) -> DataFrame:
-                # "_"-prefixed: Spark's scans hide _*/.* paths, so a
-                # root-level read of spill_dir never sees stage spills
-                p = _os.path.join(spill_dir, f"_stage_{tag}")
-                df.write.mode("overwrite").parquet(p)
-                return docs.sparkSession.read.parquet(p)
+    def spill(sub: str) -> str | None:
+        # "_stage_*": Spark's scans hide _*/.* paths, so a root-level
+        # read of spill_dir never sees stage spills
+        return None if spill_dir is None else _os.path.join(spill_dir, sub)
 
-            return pin
-
-        sem_pin = _spill_pin("semantic_in")
-        clf_pin = _spill_pin("classifier_in")
-        lm_pin = _spill_pin("lm_in")
-    else:
-        sem_pin = clf_pin = lm_pin = _pin_local
     lm_score = _lm_scorer_or_none(
         lm_model, lm_max_ppl, lm_scorer, id_col, text_col,
         "corpus_curation_batch", discount=lm_discount,
@@ -930,20 +892,20 @@ def corpus_curation_batch(
     )
     clean = _decontaminate_semantic(
         clean, docs, semantic_eval_emb, semantic_min_sim,
-        id_col, semantic_vec_col, pin=sem_pin,
+        id_col, semantic_vec_col, spill_dir=spill("_stage_semantic_in"),
     )
     clean = _classifier_admit(
         clean, classifier_weights, classifier_num_buckets,
         classifier_ns, classifier_min_prob, classifier_binary,
-        id_col, text_col, pin=clf_pin,
+        id_col, text_col, spill_dir=spill("_stage_classifier_in"),
     )
-    clean = _lm_admit(clean, lm_score, lm_max_ppl, id_col, pin=lm_pin)
-    if spill_dir is not None:
-        curated = _os.path.join(spill_dir, "curated")
-        clean.write.mode("overwrite").parquet(curated)
-        clean = docs.sparkSession.read.parquet(curated)
-    else:
+    clean = _lm_admit(
+        clean, lm_score, lm_max_ppl, id_col, spill_dir=spill("_stage_lm_in")
+    )
+    if spill_dir is None:
         clean = clean.persist()
+    else:
+        clean = pin(clean, "corpus_curation_batch: curated", spill("curated"))
     cands = minhash_candidate_pairs(
         clean,
         num_hashes=num_hashes,

@@ -79,6 +79,7 @@ from ..functions.dedup import (
 )
 
 
+from ..pin import pin
 from .store import store_append, store_compact_every, store_prune, store_read
 
 _GEOMETRY = "_geometry.json"
@@ -183,18 +184,13 @@ def _drop_within_batch(
         return clusters.filter(F.col("id") != F.col("cluster_id")).select(
             F.col("id").alias("__drop")
         )
-    # eager pin, same reason as dedup.keep_best: the member frame feeds
-    # three downstream plans (best / winners / drop) and Spark does not
-    # reuse subtrees — unpinned, the clusters-scores join AND the
-    # caller's score expression would evaluate three times per batch.
-    # The election itself is dedup.best_member_drops — the ONE kernel
-    # shared with batch keep_best, so the tie-break/NULL policy the
-    # congruity test pins is structural, not copy-maintained (r15
-    # review).
+    # the member frame feeds three downstream plans (best / winners /
+    # drop), as in dedup.keep_best, whose election kernel
+    # (best_member_drops) this shares
     member = (
         clusters.join(scores, "id")
         .select("cluster_id", F.col("id").alias("__m_id"), "__s")
-        .localCheckpoint(eager=True)
+        .transform(pin, "within-batch election: members")
     )
     return best_member_drops(member).select(F.col("__drop_id").alias("__drop"))
 
@@ -423,7 +419,7 @@ def _hamming_dedup_step(
             )
             # pin the (tiny, ids-only) drop set so every cached frame
             # can be released before returning
-            drops = drops.localCheckpoint(eager=True)
+            drops = pin(drops, "simhash dedup step: drops")
             # derive the admitted signatures from the PERSISTED blocks
             # frame (one (id, simhash) row per id after dedup), not
             # from `sh`: sh re-evaluates sig_builder, and for
@@ -720,10 +716,9 @@ def minhash_dedup_step(
             within_drop if cross_drop is None
             else cross_drop.unionByName(within_drop).distinct()
         )
-        # pin the (tiny, ids-only) drop set eagerly so the cached
-        # signature frames can be released before returning — a
-        # long-running stream must not accumulate cache entries
-        drops = drops.localCheckpoint(eager=True)
+        # pin the (tiny, ids-only) drop set so the cached signature
+        # frames can be released before returning
+        drops = pin(drops, "minhash dedup step: drops")
         admitted_sigs = sig_left.join(
             drops, sig_left["id"] == F.col("__drop"), "left_anti"
         ).persist()
@@ -959,10 +954,9 @@ def _containment_dedup_step(
                 within_drop if cross_drop is None
                 else cross_drop.unionByName(within_drop).distinct()
             )
-            # pin the ids-only drop set eagerly so cached fingerprint
-            # frames release before returning (no per-batch cache
-            # buildup)
-            drops = drops.localCheckpoint(eager=True)
+            # pin the ids-only drop set so cached fingerprint frames
+            # release before returning
+            drops = pin(drops, "winnow dedup step: drops")
             admitted_fp = pruned.join(
                 drops, pruned["id"] == F.col("__drop"), "left_anti"
             )
@@ -1052,10 +1046,9 @@ def dup_ngram_mask_step(
                 "doc_id", "__pos"
             )
             spans = island_spans(hits, n)
-            # pin the (small) span set eagerly so the gram cache can be
-            # released before returning — long streams must not
-            # accumulate
-            spans = spans.localCheckpoint(eager=True)
+            # pin the (small) span set so the gram cache can be
+            # released before returning
+            spans = pin(spans, "dup ngram step: spans")
             store_append(batch_counts, store_dir, batch_id, sort_by="__h")
         finally:
             # release on EVERY exit (r15 fix-review: exception paths

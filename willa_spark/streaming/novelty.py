@@ -44,6 +44,7 @@ from ..functions.selection import (
     _model_from_features,
     cross_entropy_score,
 )
+from ..pin import pin
 from .store import (
     store_append,
     store_compact_every,
@@ -100,7 +101,7 @@ def novelty_score_step(
             )
         feats = _gram_features(
             batch_df, num_buckets, ns, id_col, text_col
-        ).localCheckpoint(eager=True)
+        ).transform(pin, "novelty_score_step: batch features")
         # cheap local job on the pinned frame — an all-empty batch
         # appends nothing, so "prior partitions exist" (checked via
         # the driver-side listing, no cluster work) means "the prior
@@ -132,7 +133,7 @@ def novelty_score_step(
                     _feats=feats,
                 )
                 .withColumnRenamed("cross_entropy", "novelty_ce")
-                .localCheckpoint(eager=True)
+                .transform(pin, "novelty_score_step: scores")
             )
         if has_feats:
             store_append(
